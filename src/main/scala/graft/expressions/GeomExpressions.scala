@@ -6,16 +6,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.geom.{Envelope, Geometry}
 import org.locationtech.jts.operation.union.UnaryUnionOp
 
-import graft.geom.Wkb
+import graft.geom.{ConvexClip, Wkb}
 
 /** JTS-backed geometry scalar expressions over WKB (`BinaryType`)
   * columns — the engine's `st_*` namespace (SURVEY §2.7 G1-G8).
@@ -105,11 +105,13 @@ case class STIntersects(children: Seq[Expression]) extends GeomExpression {
 }
 
 /** st_intersection(a, b) → WKB of a ∩ b (G6; ref
-  * delphine/regrid.py:155-160 and the overlay at :267-270). */
+  * delphine/regrid.py:155-160 and the overlay at :267-270). Two convex
+  * polygons take the [[ConvexClip]] fast path; everything else is JTS
+  * `intersection`. */
 case class STIntersection(children: Seq[Expression]) extends GeomExpression {
   override def dataType: DataType = BinaryType
   override protected def evalNotNull(vs: Seq[Any]): Any =
-    Wkb.write(geom(vs(0)).intersection(geom(vs(1))))
+    Wkb.write(ConvexClip.intersection(geom(vs(0)), geom(vs(1))))
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c)
   override def prettyName: String = "st_intersection"
 }
@@ -398,18 +400,19 @@ case class STDistance(children: Seq[Expression]) extends GeomExpression {
   override def prettyName: String = "st_distance"
 }
 
-/** st_envelope_cells(g) — all (bx, by) grid cells of size `cellSize`
-  * that g's envelope covers, as one compiled pass: ONE WKB parse per
-  * row where the former `bucketIds` Column chain paid four (st_xmin /
-  * st_xmax / st_ymin / st_ymax each re-parsed the geometry) plus an
-  * interpreted `transform`/`flatten` lambda per cell (r16 opt, guide
-  * §1.2 per-task work). Value-identical to that chain — floor of
-  * envelope bounds over cellSize, x-major order — pinned by
-  * SpatialJoinSpec. */
+/** st_envelope_cells(g) — the packed 8-byte keys
+  * ([[STEnvelopeCells.pack]]) of all grid cells of size `cellSize` that
+  * g's envelope covers, x-major, as one compiled pass: ONE WKB parse
+  * per row where the former `bucketIds` Column chain paid four
+  * (st_xmin / st_xmax / st_ymin / st_ymax each re-parsed the geometry)
+  * plus an interpreted `transform`/`flatten` lambda per cell (r16 opt,
+  * guide §1.2 per-task work). Unpacked, the cells are value-identical
+  * to that chain — pinned by SpatialJoinSpec through `st.envelopeCells`.
+  * Fails once, naming `cellSize` and the envelope, when a bucket index
+  * leaves Int range, where two packed keys would collide. */
 case class STEnvelopeCells(children: Seq[Expression], cellSize: Double)
     extends GeomExpression {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("bx", LongType), StructField("by", LongType))))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def evalNotNull(vs: Seq[Any]): Any = {
     // EMPTY geometry (null JTS envelope, minX=0 > maxX=-1): no cells.
     // The old 4-parse chain emitted two phantom buckets here (Spark's
@@ -418,48 +421,107 @@ case class STEnvelopeCells(children: Seq[Expression], cellSize: Double)
     // empty geometry is false), pinned by SpatialJoinSpec; the loops
     // below simply produce none.
     val e = geom(vs(0)).getEnvelopeInternal
-    val bx0 = math.floor(e.getMinX / cellSize).toLong
-    val bx1 = math.floor(e.getMaxX / cellSize).toLong
-    val by0 = math.floor(e.getMinY / cellSize).toLong
-    val by1 = math.floor(e.getMaxY / cellSize).toLong
-    val out = new Array[Any](((bx1 - bx0 + 1) * (by1 - by0 + 1)).toInt)
+    def index(v: Double): Long = {
+      val i = math.floor(v / cellSize)
+      if (!(i >= Int.MinValue && i <= Int.MaxValue))
+        throw new IllegalArgumentException(
+          s"spatial join: envelope $e at cellSize=$cellSize has bucket index " +
+            s"$i outside Int range, where two packed bucket keys would " +
+            "collide; use a larger cellSize")
+      i.toLong
+    }
+    val bx0 = index(e.getMinX); val bx1 = index(e.getMaxX)
+    val by0 = index(e.getMinY); val by1 = index(e.getMaxY)
+    val n = (bx1 - bx0 + 1).toDouble * (by1 - by0 + 1)
+    if (n > Int.MaxValue - 8) throw new IllegalArgumentException(
+      s"spatial join: envelope $e at cellSize=$cellSize covers $n buckets; " +
+        "use a larger cellSize")
+    val out = new Array[Long](n.toInt)
     var i = 0
     var bx = bx0
     while (bx <= bx1) {
       var by = by0
-      while (by <= by1) { out(i) = InternalRow(bx, by); i += 1; by += 1 }
+      while (by <= by1) { out(i) = STEnvelopeCells.pack(bx, by); i += 1; by += 1 }
       bx += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(children = c)
   override def prettyName: String = "st_envelope_cells"
 }
 
-/** st_pair_refine(a, b, bx, by) — the bucket-explode join's ENTIRE
+object STEnvelopeCells {
+  /** The 8-byte join key of bucket (bx, by): bx in the high 32 bits, by
+    * in the low 32. Distinct per bucket while both indices fit an Int,
+    * which the explode checks. */
+  def pack(bx: Long, by: Long): Long = (bx << 32) | (by & 0xffffffffL)
+
+  /** Key of the one bucket that emits a candidate pair: the bucket
+    * holding the min corner of the two envelopes' intersection
+    * (reference-point dedup). */
+  def refKey(ea: Envelope, eb: Envelope, cellSize: Double): Long =
+    pack(math.floor(math.max(ea.getMinX, eb.getMinX) / cellSize).toLong,
+      math.floor(math.max(ea.getMinY, eb.getMinY) / cellSize).toLong)
+}
+
+/** st_pair_refine(a, b, key) — the point-in-polygon join's ENTIRE
   * refine predicate fused into one expression: reference-point dedup
-  * (the candidate bucket must hold the min corner of the envelope
-  * intersection) AND the exact JTS predicate (`contains` or
-  * `intersects`), with ONE WKB parse per side. The former refine
-  * Column chain (`refBucket` + `st_contains`) parsed each geometry
-  * three times per candidate — st_xmin(a), st_ymin(a), the predicate's
-  * own a (and the same for b): six parses per candidate row, measured
-  * ~2.6 µs vs ~0.8 µs fused at sf0.1 (r16 opt). Short-circuits the
-  * JTS predicate when the bucket check fails, exactly like the old
-  * `&&`. Value-identical — pinned by SpatialJoinSpec. */
-case class STPairRefine(children: Seq[Expression], cellSize: Double,
-    intersects: Boolean) extends GeomExpression {
+  * (the candidate's packed bucket key must be the one holding the min
+  * corner of the envelope intersection) AND JTS `contains`, with ONE
+  * WKB parse per side. The former refine Column chain (`refBucket` +
+  * `st_contains`) parsed each geometry three times per candidate —
+  * st_xmin(a), st_ymin(a), the predicate's own a (and the same for b):
+  * six parses per candidate row, measured ~2.6 µs vs ~0.8 µs fused at
+  * sf0.1 (r16 opt). Short-circuits `contains` when the bucket check
+  * fails, exactly like the old `&&`. Value-identical — pinned by
+  * SpatialJoinSpec. */
+case class STPairRefine(children: Seq[Expression], cellSize: Double)
+    extends GeomExpression {
   override def dataType: DataType = BooleanType
   override protected def evalNotNull(vs: Seq[Any]): Any = {
     val ga = geom(vs(0)); val gb = geom(vs(1))
-    val ea = ga.getEnvelopeInternal; val eb = gb.getEnvelopeInternal
-    val bx = math.floor(math.max(ea.getMinX, eb.getMinX) / cellSize).toLong
-    val by = math.floor(math.max(ea.getMinY, eb.getMinY) / cellSize).toLong
-    bx == vs(2).asInstanceOf[Long] && by == vs(3).asInstanceOf[Long] &&
-      (if (intersects) ga.intersects(gb) else ga.contains(gb))
+    STEnvelopeCells.refKey(ga.getEnvelopeInternal, gb.getEnvelopeInternal,
+      cellSize) == vs(2).asInstanceOf[Long] && ga.contains(gb)
   }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(children = c)
   override def prettyName: String = "st_pair_refine"
+}
+
+/** st_pair_overlay(a, b, key) — the overlay join's whole per-candidate
+  * step as one generator, from ONE WKB parse per side: reference-point
+  * dedup on the packed bucket key, the envelope-overlap reject, JTS
+  * `intersects`, then the piece a ∩ b ([[ConvexClip]]'s convex fast
+  * path, JTS `intersection` otherwise) and its area, taken from the
+  * piece's own vertices rather than a re-parse of its WKB. Emits 0 or
+  * 1 `(piece_geom, piece_area)` rows.
+  *
+  * A generator rather than a struct-valued expression so that Catalyst
+  * cannot duplicate it: a deterministic scalar whose fields are read
+  * twice is inlined into both reads by CollapseProject, which would
+  * run the overlay once per output column. */
+case class STPairOverlay(children: Seq[Expression], cellSize: Double)
+    extends Generator with CodegenFallback {
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("piece_geom", BinaryType, nullable = false),
+    StructField("piece_area", DoubleType, nullable = false)))
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val va = children(0).eval(input)
+    val vb = children(1).eval(input)
+    val key = children(2).eval(input)
+    if (va == null || vb == null || key == null) return Nil
+    val ga = Wkb.read(va.asInstanceOf[Array[Byte]])
+    val gb = Wkb.read(vb.asInstanceOf[Array[Byte]])
+    val ea = ga.getEnvelopeInternal; val eb = gb.getEnvelopeInternal
+    if (STEnvelopeCells.refKey(ea, eb, cellSize) != key.asInstanceOf[Long] ||
+        !ea.intersects(eb) || !ga.intersects(gb)) Nil
+    else {
+      val piece = ConvexClip.intersection(ga, gb)
+      Iterator.single(InternalRow(Wkb.write(piece), piece.getArea))
+    }
+  }
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
+    copy(children = c)
+  override def prettyName: String = "st_pair_overlay"
 }

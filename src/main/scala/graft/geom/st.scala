@@ -1,6 +1,6 @@
 package graft.geom
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{functions, Column}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -29,11 +29,19 @@ object st {
   def intersects(a: Column, b: Column): Column = c(STIntersects(Seq(x(a), x(b))))
   def intersection(a: Column, b: Column): Column = c(STIntersection(Seq(x(a), x(b))))
 
-  def envelopeCells(g: Column, cellSize: Double): Column =
+  /** Grid cells of g's envelope as packed 8-byte bucket keys. */
+  def envelopeKeys(g: Column, cellSize: Double): Column =
     c(STEnvelopeCells(Seq(x(g)), cellSize))
-  def pairRefine(a: Column, b: Column, bx: Column, by: Column,
-      cellSize: Double, intersects: Boolean): Column =
-    c(STPairRefine(Seq(x(a), x(b), x(bx), x(by)), cellSize, intersects))
+  /** The same cells unpacked to (bx, by) structs. */
+  def envelopeCells(g: Column, cellSize: Double): Column =
+    functions.transform(envelopeKeys(g, cellSize), k => functions.struct(
+      functions.shiftright(k, 32).as("bx"),
+      functions.shiftright(functions.shiftleft(k, 32), 32).as("by")))
+  def pairRefine(a: Column, b: Column, key: Column, cellSize: Double): Column =
+    c(STPairRefine(Seq(x(a), x(b), x(key)), cellSize))
+  /** Generator of 0 or 1 (piece_geom, piece_area) rows per candidate. */
+  def pairOverlay(a: Column, b: Column, key: Column, cellSize: Double): Column =
+    c(STPairOverlay(Seq(x(a), x(b), x(key)), cellSize))
 
   def area(g: Column): Column = c(STArea(Seq(x(g))))
   def buffer(g: Column, dist: Column): Column = c(STBuffer(Seq(x(g), dx(dist))))

@@ -13,8 +13,8 @@ import scala.collection.mutable.ArrayBuffer
   * Scope (all the GeoPackage layer needs, checked with `require`):
   *  - table b-trees only (no indexes — DDL written by [[GeoPackage]]
   *    avoids constraints that imply auto-indexes);
-  *  - single-page `sqlite_master`, one interior level per table
-  *    (≈ 500 leaf pages ≈ a few hundred thousand small rows);
+  *  - single-page `sqlite_master`; table b-trees of any depth (interior
+  *    levels are built bottom-up until one root page remains);
   *  - WRITER cell payloads of any size: payloads over the spec's X
   *    threshold (usable−35) spill into overflow-page chains with the
   *    local portion sized by the X/M/K formula (spec §"B-tree Pages"),
@@ -237,6 +237,20 @@ object Sqlite {
     page
   }
 
+  /** Children per interior page at the worst-case cell size (4-byte
+    * child pointer + 9-byte rowid varint + 2-byte pointer-array slot),
+    * plus the right-most child, which takes no cell. */
+  private val InteriorFanout = (PageSize - 12) / 15 + 1
+
+  /** Split one b-tree level's (page, max rowid) children into interior
+    * pages of near-equal size. Each page then has at least two children
+    * (so at least one cell) whenever there is more than one page. */
+  private def packInterior(children: Seq[(Int, Long)]): Seq[Seq[(Int, Long)]] = {
+    val n = children.size
+    val pages = (n + InteriorFanout - 1) / InteriorFanout
+    (0 until pages).map(i => children.slice(i * n / pages, (i + 1) * n / pages))
+  }
+
   private def renderInterior(children: Seq[(Int, Long)], rightMost: Int): Array[Byte] = {
     val page = new Array[Byte](PageSize)
     val buf = ByteBuffer.wrap(page)
@@ -263,7 +277,8 @@ object Sqlite {
   def write(path: String, tables: Seq[TableDef]): Unit = {
     // layout pass: leaves per table (cell sizes don't depend on page
     // numbers), then assign page numbers: 1 = sqlite_master root,
-    // then per table [interior?][leaves...]
+    // then per table its leaves (and their overflow chains), then its
+    // interior levels bottom-up, the root last
     val tableLeaves = tables.map { t =>
       packLeaves(t.rows.map { case (rid, vs) => leafCell(rid, vs) })
     }
@@ -295,24 +310,25 @@ object Sqlite {
     def resolve(cells: Seq[Cell]): Seq[(Cell, Int)] =
       cells.map(c => (c, if (c.tail.isEmpty) 0 else allocOverflow(c.tail)))
 
-    tables.zip(tableLeaves).foreach { case (t, leaves) =>
-      if (leaves.size == 1) {
-        val rootNo = next
-        rootPages += rootNo
-        next += 1
-        pageImages += rootNo -> renderLeaf(resolve(leaves.head), 0)
-      } else {
-        val rootNo = next
-        rootPages += rootNo
-        val leafNos = (next + 1) until (next + 1 + leaves.size)
-        next += 1 + leaves.size
-        val withKeys = leafNos.zip(leaves.map(_.last.rowid))
-        pageImages += rootNo -> renderInterior(
-          withKeys.init.map { case (p, k) => (p, k) }, leafNos.last)
-        leafNos.zip(leaves).foreach { case (no, ls) =>
-          pageImages += no -> renderLeaf(resolve(ls), 0)
+    tableLeaves.foreach { leaves =>
+      val leafNos = next until next + leaves.size
+      next += leaves.size
+      leafNos.zip(leaves).foreach { case (no, ls) =>
+        pageImages += no -> renderLeaf(resolve(ls), 0)
+      }
+      // (page, largest rowid in its subtree); an interior cell keys its
+      // left child by that rowid, the right-most child has no cell
+      var level: Seq[(Int, Long)] =
+        leafNos.zip(leaves.map(ls => if (ls.isEmpty) 0L else ls.last.rowid))
+      while (level.size > 1) {
+        level = packInterior(level).map { children =>
+          val no = next
+          next += 1
+          pageImages += no -> renderInterior(children.init, children.last._1)
+          (no, children.last._2)
         }
       }
+      rootPages += level.head._1
     }
 
     // sqlite_master (single leaf on page 1); master payloads are DDL

@@ -11,15 +11,28 @@ import graft.geom.st
   * The reference leans on GeoPandas' in-RAM R-tree (`sjoin`
   * delphine/regrid.py:167-177, `overlay` :267-270) — single-process,
   * whole-dataset-in-memory. The scale-out re-expression: assign every
-  * geometry the grid buckets its envelope covers (a generator over pure
-  * column arithmetic — codegen'd, no shuffle), equi-join on the bucket id
-  * (stock shuffle-hash/sort-merge join on an 16-byte key — Catalyst
-  * plans, AQE handles skew), then refine with the exact JTS predicate.
+  * geometry the grid buckets its envelope covers (one compiled
+  * generator, one WKB parse per row, no shuffle), equi-join on the
+  * bucket, then refine with the exact predicate.
+  *
+  * The join key is ONE 8-byte `bigint` per bucket, `(bx << 32) |
+  * (by & 0xffffffff)` ([[graft.expressions.STEnvelopeCells.pack]]): a
+  * stock shuffle-hash/sort-merge join on it plans like any long key
+  * (AQE handles skew), and a broadcast side builds as Spark's
+  * `LongHashedRelation`, sized to its data, where a 16-byte struct key
+  * took an `UnsafeHashedRelation` that allocates a whole
+  * `spark.buffer.pageSize` page per build. The explode fails loudly
+  * when a bucket index leaves Int range instead of letting two keys
+  * collide.
   *
   * Duplicate-pair elimination uses REFERENCE-POINT dedup: a candidate
   * pair may share several buckets, but is emitted only from the bucket
-  * containing the top-left corner of the envelope intersection — pure
-  * arithmetic, no `distinct()` shuffle afterwards.
+  * containing the min corner of the envelope intersection — pure
+  * arithmetic, no `distinct()` shuffle afterwards. The two named
+  * predicates fold it into one expression with the exact test, so each
+  * candidate parses each side's WKB once: [[joinContains]] through
+  * `st_pair_refine`, [[overlayIntersection]] through the
+  * `st_pair_overlay` generator, which also computes the piece.
   *
   * 100 TB notes: shuffle volume is O(geoms × buckets-per-geom); pick
   * `cellSize` near the median geometry extent so buckets-per-geom stays
@@ -28,7 +41,8 @@ import graft.geom.st
   */
 object SpatialJoin {
 
-  /** Packed ids of all buckets a geometry's envelope covers. */
+  /** (bx, by) structs of all buckets a geometry's envelope covers — the
+    * Column-chain form of `st.envelopeCells`. */
   def bucketIds(geom: Column, cellSize: Double): Column = {
     val bx0 = floor(st.xmin(geom) / cellSize).cast("long")
     val bx1 = floor(st.xmax(geom) / cellSize).cast("long")
@@ -39,70 +53,66 @@ object SpatialJoin {
         struct(bx.as("bx"), by.as("by")))))
   }
 
-  /** The single bucket holding the reference point (min corner of the
-    * envelope intersection) of a candidate pair. */
-  private def refBucket(a: Column, b: Column, cellSize: Double): Column =
-    struct(
-      floor(greatest(st.xmin(a), st.xmin(b)) / cellSize).cast("long").as("bx"),
-      floor(greatest(st.ymin(a), st.ymin(b)) / cellSize).cast("long").as("by"))
+  /** The packed key of the single bucket holding the reference point
+    * (min corner of the envelope intersection) of a candidate pair. */
+  private def refKey(a: Column, b: Column, cellSize: Double): Column = {
+    val bx = floor(greatest(st.xmin(a), st.xmin(b)) / cellSize).cast("long")
+    val by = floor(greatest(st.ymin(a), st.ymin(b)) / cellSize).cast("long")
+    shiftleft(bx, 32).bitwiseOR(by.bitwiseAND(lit(0xffffffffL)))
+  }
+
+  /** Both sides exploded to their packed bucket keys and equi-joined. */
+  private def candidates(left: DataFrame, right: DataFrame,
+      leftGeom: String, rightGeom: String, cellSize: Double): DataFrame = {
+    val l = left.withColumn("__bucket",
+      explode(st.envelopeKeys(col(leftGeom), cellSize)))
+    val r = right.withColumn("__bucket",
+      explode(st.envelopeKeys(col(rightGeom), cellSize)))
+    l.join(r, "__bucket")
+  }
 
   /** Spatial join of `left` and `right` on `predicate(leftGeom,
     * rightGeom)`. Column names of the two sides must be disjoint.
     * Emits each qualifying pair exactly once.
     *
-    * The generic-predicate form: bucket explode and reference-point
-    * dedup run as the fused one-parse-per-row expressions
-    * ([[graft.expressions.STEnvelopeCells]]), but the caller's
-    * predicate stays a separate Column, so its geometry arguments
-    * re-parse. [[joinContains]]/[[overlayIntersection]] — the two
-    * named predicates every declared query uses — go through
-    * [[joinFused]] instead, which folds the predicate into the same
-    * single parse (r16 opt; 6 WKB parses per candidate → 2). */
+    * The generic-predicate form: the caller's predicate and the
+    * reference-point dedup stay separate Columns, so the geometry
+    * re-parses for each. [[joinContains]]/[[overlayIntersection]] — the
+    * two named predicates every declared query uses — fuse both into
+    * one parse per side per candidate instead. */
   def join(left: DataFrame, right: DataFrame,
       leftGeom: String, rightGeom: String, cellSize: Double,
-      predicate: (Column, Column) => Column): DataFrame = {
-    val l = left.withColumn("__bucket",
-      explode(st.envelopeCells(col(leftGeom), cellSize)))
-    val r = right.withColumn("__bucket",
-      explode(st.envelopeCells(col(rightGeom), cellSize)))
-    l.join(r, "__bucket")
-      .filter(col("__bucket") === refBucket(col(leftGeom), col(rightGeom), cellSize) &&
+      predicate: (Column, Column) => Column): DataFrame =
+    candidates(left, right, leftGeom, rightGeom, cellSize)
+      .filter(col("__bucket") === refKey(col(leftGeom), col(rightGeom), cellSize) &&
         predicate(col(leftGeom), col(rightGeom)))
       .drop("__bucket")
-  }
 
-  /** [[join]] with the refine fully fused ([[graft.expressions.STPairRefine]]):
-    * reference-point dedup + the named JTS predicate in ONE expression,
-    * one WKB parse per side per candidate. */
-  private def joinFused(left: DataFrame, right: DataFrame,
-      leftGeom: String, rightGeom: String, cellSize: Double,
-      intersects: Boolean): DataFrame = {
-    val l = left.withColumn("__bucket",
-      explode(st.envelopeCells(col(leftGeom), cellSize)))
-    val r = right.withColumn("__bucket",
-      explode(st.envelopeCells(col(rightGeom), cellSize)))
-    l.join(r, "__bucket")
-      .filter(st.pairRefine(col(leftGeom), col(rightGeom),
-        col("__bucket.bx"), col("__bucket.by"), cellSize, intersects))
-      .drop("__bucket")
-  }
-
-  /** J3: point-in-polygon join (the reference's `sjoin`). */
+  /** J3: point-in-polygon join (the reference's `sjoin`): reference-point
+    * dedup + JTS `contains` fused in [[graft.expressions.STPairRefine]]. */
   def joinContains(polys: DataFrame, points: DataFrame,
       polyGeom: String, pointGeom: String, cellSize: Double): DataFrame =
-    joinFused(polys, points, polyGeom, pointGeom, cellSize,
-      intersects = false)
+    candidates(polys, points, polyGeom, pointGeom, cellSize)
+      .filter(st.pairRefine(col(polyGeom), col(pointGeom), col("__bucket"), cellSize))
+      .drop("__bucket")
 
   /** J4: overlay intersection (the reference's `gpd.overlay(...,
     * "intersection")`) — qualifying pairs carry both attribute sets plus
-    * the intersection piece and its area. */
+    * the intersection piece `piece_geom` and its area `piece_area`.
+    *
+    * Each candidate runs [[graft.expressions.STPairOverlay]] once: one
+    * WKB parse per side, then reference-point dedup, the envelope and
+    * `intersects` rejects, and the piece. Two hole-free convex polygons
+    * (grid boxes, Voronoi cells) take the [[graft.geom.ConvexClip]]
+    * Sutherland–Hodgman fast path and the area comes from the clipped
+    * vertices; any other pair, and any touching or lower-dimension
+    * result, falls back to JTS `intersection`. */
   def overlayIntersection(left: DataFrame, right: DataFrame,
       leftGeom: String, rightGeom: String, cellSize: Double): DataFrame =
-    joinFused(left, right, leftGeom, rightGeom, cellSize,
-      intersects = true)
-      .withColumn("__piece", st.intersection(col(leftGeom), col(rightGeom)))
-      .withColumn("piece_area", st.area(col("__piece")))
-      .withColumnRenamed("__piece", "piece_geom")
+    candidates(left, right, leftGeom, rightGeom, cellSize)
+      .select(col("*"), st.pairOverlay(col(leftGeom), col(rightGeom),
+        col("__bucket"), cellSize).as(Seq("piece_geom", "piece_area")))
+      .drop("__bucket")
 
   /** Distance join (`ST_DWithin`): every (a, b) point pair within
     * Euclidean distance `d`, as `(id_a, id_b, dist)`. The left side

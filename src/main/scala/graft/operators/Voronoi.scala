@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, Envelope, Geometry}
 import org.locationtech.jts.triangulate.VoronoiDiagramBuilder
 
-import graft.geom.Wkb
+import graft.geom.{ConvexClip, Wkb}
 
 /** Voronoi tessellation of seed points into cell polygons — the
   * reference's signature capability (`voronoi_finite_polygons_2d`,
@@ -52,8 +52,12 @@ object Voronoi {
           .map(_.id)
           .getOrElse(throw new IllegalStateException(
             s"voronoi cell $i matches no seed")))
-      // builder clips to an *expanded* envelope; intersect exactly
-      (id, Wkb.write(cell.intersection(clipPoly)))
+      // VoronoiDiagramBuilder clips to an *expanded* envelope; cut each cell to
+      // the exact clip box. A cell and a box are both convex, so this
+      // is a ConvexClip Sutherland–Hodgman pass over the cell's
+      // vertices (JTS overlay only for a cell that is not a convex
+      // polygon or whose piece degenerates)
+      (id, Wkb.write(ConvexClip.intersection(cell, clipPoly)))
     }
   }
 

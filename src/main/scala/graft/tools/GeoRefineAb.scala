@@ -13,7 +13,7 @@ import graft.util.Exact
   * VERDICT r16 Next #3 "plausible-noise, not proven-noise"):
   * alternate the two declared join shapes between the FUSED refine
   * ([[SpatialJoin.joinContains]]/[[SpatialJoin.overlayIntersection]] —
-  * one `st_pair_refine`, one WKB parse per side) and the GENERIC
+  * `st_pair_refine` / `st_pair_overlay`, one WKB parse per side) and the GENERIC
   * Column-chain refine ([[SpatialJoin.join]] — reference-point struct
   * compare + separate predicate, ~6 parses per candidate). The explode
   * side is fused in both, so the A/B isolates exactly the refine

@@ -87,4 +87,45 @@ class GeoPackageSpec extends AnyFunSuite with SparkSpec {
     assert(back.count() == n)
     assert(back.agg(sum("id")).head().getLong(0) == n.toLong * (n + 1) / 2)
   }
+
+  test("33,286-feature layer: several interior b-tree levels, stock sqlite3 agrees") {
+    // the reference's wrf_voronoi.py GPKG layer size: ~1,000 leaf pages,
+    // more than one interior page can address
+    val n = 33286
+    val big = spark.range(1, n + 1).select(col("id"),
+        concat(lit("cell_"), col("id")).as("name"), (col("id") * 0.25).as("score"))
+      .withColumn("geom", st.makeBox(col("id") % 187 * 1.0, floor(col("id") / 187) * 1.0,
+        col("id") % 187 * 1.0 + 1.0, floor(col("id") / 187) * 1.0 + 1.0))
+    val path = Files.createTempDirectory("gpkg_spec").resolve("wrf.gpkg").toString
+    GeoPackage.write(big, "geom", path, "cells")
+    val back = GeoPackage.read(spark, path, "cells", StructType(Seq(
+      StructField("id", LongType), StructField("name", StringType),
+      StructField("score", DoubleType))))
+    val agg = back.agg(count(lit(1)), sum("id"), sum("score"), sum(st.area(col("geom"))),
+      sum(when(col("name") === concat(lit("cell_"), col("id")), 1).otherwise(0))).head()
+    assert(agg.getLong(0) == n)
+    assert(agg.getLong(1) == n.toLong * (n + 1) / 2)
+    assert(agg.getDouble(2) == n.toLong * (n + 1) / 2 * 0.25)
+    assert(agg.getDouble(3) == n.toDouble)
+    assert(agg.getLong(4) == n)
+
+    val python = new java.io.File("/usr/bin/python3")
+    assume(python.exists, "python3 not available")
+    val script =
+      s"""import sqlite3
+         |con = sqlite3.connect("$path")
+         |ok, = con.execute("PRAGMA integrity_check").fetchone()
+         |cnt, = con.execute("SELECT count(*) FROM cells").fetchone()
+         |last, = con.execute("SELECT name FROM cells WHERE fid = $n").fetchone()
+         |assert ok == "ok", ok
+         |assert cnt == $n, cnt
+         |assert last == "cell_$n", last
+         |print("SQLITE_OK")
+         |""".stripMargin
+    val p = new ProcessBuilder("/usr/bin/python3", "-c", script)
+      .redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
+    p.waitFor()
+    assert(out.contains("SQLITE_OK"), s"sqlite3 validation failed:\n$out")
+  }
 }

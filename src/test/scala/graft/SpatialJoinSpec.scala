@@ -105,6 +105,38 @@ class SpatialJoinSpec extends SparkSpec {
     assert(SpatialJoin.overlayIntersection(empt, pts, "ga", "gb", 1.0).count() == 0)
   }
 
+  test("packed bucket keys: negative cells join, out-of-Int cells fail loudly") {
+    // boxes straddling both axes: bx and by take negative values, whose
+    // low-word packing must agree between the explode, the fused refine
+    // and the generic chain's Column-built reference key
+    def boxes(seed: Int, n: Int, idName: String, gName: String) =
+      spark.range(n).select($"id".as(idName),
+        st.makeBox(
+          pmod(hash($"id", lit(seed)), lit(200)) / 10.0 - 10.0,
+          pmod(hash($"id", lit(seed + 1)), lit(200)) / 10.0 - 10.0,
+          pmod(hash($"id", lit(seed)), lit(200)) / 10.0 - 9.2,
+          pmod(hash($"id", lit(seed + 1)), lit(200)) / 10.0 - 9.5).as(gName))
+    val a = boxes(5, 60, "aid", "ga")
+    val b = boxes(9, 60, "bid", "gb")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("aid", "bid").as[(Long, Long)].collect().toSeq.sorted
+    val chain = pairs(SpatialJoin.join(a, b, "ga", "gb", 1.3,
+      (l, r) => st.intersects(l, r)))
+    assert(chain.nonEmpty && pairs(SpatialJoin.overlayIntersection(a, b, "ga", "gb", 1.3)) == chain)
+    // a 1e6-wide box at cellSize 1e-4 spans bucket indices up to 1e10:
+    // past Int range two packed keys would collide, so the explode
+    // refuses instead of joining wrong pairs
+    val huge = Seq(1L).toDF("aid").select($"aid",
+      st.makeBox(lit(0.0), lit(0.0), lit(1e6), lit(1.0)).as("ga"))
+    val ex = intercept[Exception] {
+      SpatialJoin.overlayIntersection(huge, b, "ga", "gb", 1e-4).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(ex).exists(m => m.contains("cellSize=1.0E-4") &&
+      m.contains("Env[0.0 : 1000000.0, 0.0 : 1.0]")), messages(ex).mkString("\n"))
+  }
+
   test("selfJoinWithinDistance equals the generic two-sided form") {
     // deterministic pseudo-random cloud spanning many cells, duplicate
     // coordinates included (ids 200..209 reuse id%10's position) so

@@ -23,7 +23,7 @@ Changed set (fresh-only), derived from the 4e48f6a..HEAD diff:
 
 Usage: pool_r17.py out.json prev_pool.json sweep1.json [sweep2.json ...]
 """
-import json, sys, re, subprocess, math
+import json, sys
 
 out_path, prev_path = sys.argv[1], sys.argv[2]
 sweep_paths = sys.argv[3:]
@@ -45,6 +45,12 @@ CHANGED_NAMES = {"dedup_simhash"}
 names = set()
 for s in sweeps:
     names.update(s["queries"].keys())
+
+# a pooled query that no fresh sweep ran would silently drop out of the
+# pool (and its total): name each one
+for n in sorted(set(prev) - names):
+    print("warning: %s is in the previous pool but missing from every "
+          "fresh sweep; left out of this pool" % n, file=sys.stderr)
 
 pool, fresh_only = {}, []
 for n in sorted(names):
